@@ -112,40 +112,41 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
     assert children[2].startswith("RuleNotFoundError")
 
 
-def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path):
-    """The adaptive strategy switches (bloom seen-filter engaged,
-    shuffle fetch forced instead of broadcast) must not change any
-    output: records, seen set, and final results are identical."""
+def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
+    """The round loop's strategy switches must not change any output:
+    the shuffle fetch (forced by a zero broadcast cap) and the politeness
+    ranking (forced by a budgets table that never binds, which turns off
+    the short-circuit) give the same per-round counters, records, seen
+    set and final results as the default path."""
+    import uniparser_spark.crawl.engine as engine_mod
+
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    loose = spark.createDataFrame(
+        [(testgen.host_name(i), 10**6) for i in range(3)], "host string, budget int"
+    )
 
-    variants = {
-        "default": {},
-        "bloom": {"bloom_min_seen": 0},
-        "shuffle_fetch": {"broadcast_fetch_max": 0},
-    }
-    outputs = {}
-    for name, kwargs in variants.items():
+    def crawl(name, **kwargs):
         eng = CrawlEngine(
-            spark,
-            pages,
-            storage_json,
-            tmp_path / f"state_{name}",
-            state_partitions=4,
-            **kwargs,
+            spark, pages, storage_json, tmp_path / f"state_{name}", state_partitions=4, **kwargs
         )
         eng.seed(seeds)
-        eng.run(max_rounds=10)
+        rounds = [
+            (s["round"], s["scheduled"], s.get("new_candidates"), s.get("deferred"))
+            for s in eng.run(max_rounds=10)
+        ]
         recs = {
             (r["url"], r["rule_name"], r["result"], r["error"])
             for r in eng.records().collect()
         }
         seen = {r["url_canon"] for r in eng.seen().collect()}
-        outputs[name] = (recs, seen, eng.assemble_results(seeds))
+        return rounds, recs, seen, eng.assemble_results(seeds)
 
-    base = outputs["default"]
-    for name in ("bloom", "shuffle_fetch"):
-        assert outputs[name] == base, f"{name} diverged from default"
+    base = crawl("default")
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "BROADCAST_FETCH_MAX", 0)
+        assert crawl("shuffle_fetch") == base, "shuffle fetch diverged from default"
+    assert crawl("ranking", budgets=loose) == base, "ranking diverged from default"
 
 
 def test_expire_and_requeue_recrawls(spark, corpus, tmp_path):

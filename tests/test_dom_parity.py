@@ -1,6 +1,6 @@
 """Fast-tokenizer ↔ stdlib-tokenizer parity.
 
-The fast scanner (dom.fasthtml) must build the identical DOM to the
+The fused fast parser (dom.html) must build the identical DOM to the
 stdlib html.parser bridge for everything the engine can encounter:
 the golden-fixture corpus, the synthetic crawl corpus, and adversarial
 edge strings.  Identity is checked structurally (tag/attrs/text tree),
@@ -58,10 +58,10 @@ EDGES = [
 ]
 
 
-def _three_way(markup):
-    ref = tree(parse_html(markup, engine="std"))
-    assert tree(parse_html(markup, engine="fast")) == ref  # fused engine
-    assert tree(parse_html(markup, engine="scan")) == ref  # callback scanner
+def _two_way(markup):
+    assert tree(parse_html(markup, engine="fast")) == tree(
+        parse_html(markup, engine="std")
+    )
 
 
 _MARKED_EDGES = [
@@ -82,23 +82,23 @@ _MARKED_EDGES = [
 
 @pytest.mark.parametrize("markup", _MARKED_EDGES)
 def test_marked_section_edges_never_crash(markup):
-    _three_way(markup)
+    _two_way(markup)
 
 
 @pytest.mark.parametrize("markup", EDGES)
 def test_edges_parity(markup):
-    _three_way(markup)
+    _two_way(markup)
 
 
 def test_golden_fixture_parity():
-    _three_way(GOLDEN_HTML)
+    _two_way(GOLDEN_HTML)
 
 
 def test_synthetic_corpus_parity():
     host = host_name(0)
     for k in range(25):
-        _three_way(detail_html(host, k))
-    _three_way(list_html(host, 40))
+        _two_way(detail_html(host, k))
+    _two_way(list_html(host, 40))
 
 
 def test_selection_on_fast_dom():
@@ -135,7 +135,7 @@ try:
     @settings(max_examples=300, deadline=None)
     @given(_soup)
     def test_fuzz_tokenizer_parity(markup):
-        _three_way(markup)
+        _two_way(markup)
 
 except ImportError:  # pragma: no cover
     pass

@@ -30,9 +30,10 @@ Scale notes (10^10-URL design):
 - frontier/seen parquet are written repartitioned by ``pmod(url_hash)``
   so the anti-join and the next round's schedule shuffle read
   co-partitioned buckets (real deployments: Iceberg bucket transform);
-- the fetch is an equi-join frontier→pages on url (shuffle hash join;
-  pages side pruned to (url, text/html) columns only);
-- the seen-set anti-join is bloom-accelerated (frontier.seen);
+- the fetch is an equi-join frontier→pages on url (broadcast of the
+  scheduled batch, shuffle join past ``BROADCAST_FETCH_MAX``; pages side
+  pruned to (url, text/html) columns only);
+- the seen-set check is an exact anti-join on url_hash;
 - per-host politeness/priority runs salted (frontier.politeness).
 """
 
@@ -58,7 +59,7 @@ from .. import config
 from ..engine.extract import extract_pages
 from ..frontier.politeness import schedule_batch
 from ..frontier.robots import apply_robots
-from ..frontier.seen import BloomSeenFilter, add_url_keys
+from ..frontier.seen import add_url_keys
 
 FRONTIER_SCHEMA = StructType(
     [
@@ -82,6 +83,10 @@ _META_COLS = ["url", "url_canon", "url_hash", "host", "priority", "depth", "pare
 SEEN_SCHEMA = "url_hash long, url_canon string, crawled_round int"
 _RECORDS_EXPAND_SCHEMA = "url string, depth int, requests array<string>"
 
+# scheduled batches up to this many pending URLs are broadcast into the
+# pages scan, so page bodies never cross a shuffle; larger ones shuffle
+BROADCAST_FETCH_MAX = 5_000_000
+
 
 class CrawlEngine:
     def __init__(
@@ -94,11 +99,6 @@ class CrawlEngine:
         robots: Optional[DataFrame] = None,
         default_budget: int = 100000,
         salt_buckets: int = 16,
-        use_bloom: bool = True,
-        bloom_buckets: int = 64,
-        bloom_min_seen: int = 1_000_000,
-        broadcast_fetch_max: int = 5_000_000,
-        isin_fetch_max: int = 512,
         state_partitions: Optional[int] = None,
         text_col: str = "text",
         html_col: Optional[str] = None,
@@ -147,10 +147,6 @@ class CrawlEngine:
         self.honor_nofollow = honor_nofollow
         self.default_budget = default_budget
         self.salt_buckets = salt_buckets
-        self.bloom = BloomSeenFilter(n_buckets=bloom_buckets) if use_bloom else None
-        self.bloom_min_seen = bloom_min_seen
-        self.broadcast_fetch_max = broadcast_fetch_max
-        self.isin_fetch_max = isin_fetch_max
         self.state_partitions = state_partitions or spark.sparkContext.defaultParallelism
         self.text_col = text_col
         self.html_col = html_col
@@ -319,11 +315,12 @@ class CrawlEngine:
 
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
-        """One scheduling round in exactly THREE Spark actions (records
-        write, seen write, frontier write) — per-round stats ride on the
-        writes via ``Observation`` instead of separate count() jobs, and
-        frontier metadata is carried through the extraction UDF instead
-        of re-joined, so nothing in the round is computed twice."""
+        """One scheduling round in three sink writes (records, seen
+        delta, frontier), each run as several Spark jobs (AQE stages and
+        broadcasts) — per-round stats ride on the writes via
+        ``Observation`` instead of separate count() jobs, and frontier
+        metadata is carried through the extraction UDF instead of
+        re-joined, so nothing in the round is computed twice."""
         manifest = self.read_manifest()
         rnd = manifest["round"]
         if manifest.get("done"):
@@ -358,7 +355,7 @@ class CrawlEngine:
             scheduled = decided.filter(F.col("scheduled")).drop("scheduled")
             deferred = decided.filter(~F.col("scheduled")).drop("scheduled")
 
-        # ACTION 1 — fetch + extract + records sink.  Fetch = equi-join
+        # WRITE 1 — fetch + extract + records sink.  Fetch = equi-join
         # against the pages table (no network; the adapter seam of the
         # reference, parsers.py:1497-1517); frontier meta rides through
         # the UDF via passthrough.
@@ -369,8 +366,8 @@ class CrawlEngine:
         # pages scan so the HTML never crosses a shuffle; the rows the
         # pages table misses are recovered with a broadcast anti-join
         # (cheap: url strings only).  Falls back to a shuffle join for
-        # outsized batches (the 10^10-scale path, where AQE + runtime
-        # bloom filters prune the scan instead).
+        # outsized batches (the 10^10-scale path, where AQE + Spark's
+        # runtime join filters prune the scan instead).
         page_cols = ["url", self.text_col] + ([self.html_col] if self.html_col else [])
         body_cols = [c for c in page_cols if c != "url"]
         if self.adapter is not None:
@@ -384,19 +381,7 @@ class CrawlEngine:
             ).drop("fetch_error")
         else:
             pages_proj = self.pages.select(*page_cols)
-            if n_pending is not None and n_pending <= self.isin_fetch_max:
-                # tiny batch (typically the seed round): push the URL list
-                # into the parquet scan as an In filter — row groups whose
-                # url min/max excludes the batch are never decompressed.
-                # The cap must stay small: parquet evaluates a pushed In
-                # as a nested OR tree whose recursion depth equals the
-                # list length (a ~1000-element list marginally overflows
-                # a 1 MB executor thread stack), and once the batch has
-                # more URLs than the table has row groups the pruning
-                # buys nothing over the broadcast join below anyway.
-                urls = [r["url"] for r in scheduled.select("url").collect()]
-                pages_proj = pages_proj.filter(F.col("url").isin(urls))
-            if n_pending is not None and n_pending <= self.broadcast_fetch_max:
+            if n_pending is not None and n_pending <= BROADCAST_FETCH_MAX:
                 hits = pages_proj.join(F.broadcast(scheduled), "url", "inner")
                 misses = scheduled.join(
                     F.broadcast(pages_proj.select("url").join(
@@ -439,7 +424,7 @@ class CrawlEngine:
                 decided.unpersist()
             return {"round": rnd, "scheduled": 0, "done": True}
 
-        # ACTION 2 — seen-set DELTA: only this round's scheduled URLs
+        # WRITE 2 — seen-set DELTA: only this round's scheduled URLs
         # are written (append-only log; the live set is the union of
         # deltas, see _seen_view).  No dropDuplicates: the frontier is
         # unique by url_hash (seeds deduped at seed(); candidates
@@ -557,21 +542,9 @@ class CrawlEngine:
             # crawl-delay budgets flow in separately via `budgets`
             candidates = apply_robots(candidates, self.robots).select(*_META_COLS)
 
-        # ACTION 3 — dedup (bloom pre-filter + exact anti-join vs seen,
-        # then vs the deferred backlog) and next-frontier sink.  The
-        # bloom is sized from the observed seen_total (no count() job)
-        # and only engaged once the seen set is big enough to repay its
-        # build+probe stages — below the threshold a plain anti-join is
-        # strictly cheaper.
-        use_bloom = self.bloom is not None and seen_total >= self.bloom_min_seen
-        bloom_df = (
-            self.bloom.build(seen_next, expected_total=seen_total) if use_bloom else None
-        )
-        fresh = (
-            self.bloom.filter_new(candidates, seen_next, bloom_df)
-            if use_bloom
-            else candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
-        )
+        # WRITE 3 — dedup (exact anti-join on url_hash vs seen, then vs
+        # the deferred backlog) and next-frontier sink.
+        fresh = candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
         if deferred is not None:
             fresh = fresh.join(deferred.select("url_hash"), "url_hash", "left_anti")
             next_frontier = deferred.unionByName(fresh.select(*_META_COLS))
@@ -623,10 +596,8 @@ class CrawlEngine:
         """TTL recrawl: drop seen entries older than ``max_age_rounds``
         and requeue their URLs into the frontier (a maintenance round —
         state advances to round+1 so no path is read and rewritten in
-        place).  The Bloom/cuckoo accelerators are derived state and
-        follow automatically (rebuilt per round here; at 10^10 scale the
-        cuckoo sidecar's delete() patches filters incrementally instead,
-        frontier/cuckoo.py).
+        place).  The next round's anti-join reads the compacted seen
+        set, so expired URLs are admitted again.
 
         ``history`` (optional): a (url_canon, fetch_count, change_count)
         table from the caller's fetch log.  When given, requeues are

@@ -1,17 +1,15 @@
-"""Scanner-based HTML tokenizer — a drop-in replacement for stdlib
-``html.parser`` tokenization, ~3-5× faster and far lighter on
-allocations (which is what limits multi-core scaling of the extraction
-UDF: DOM parse is memory-bandwidth-bound at high worker counts).
+"""Shared pieces of the fast HTML scanner (``dom.html._fused_parse``).
 
-Produces the exact same callback stream as ``html.parser.HTMLParser``
-with ``convert_charrefs=True`` for the engine's behavioral corpus:
-lowercased tag/attr names, entity-unescaped text and attribute values,
-raw-text (CDATA) handling for script/style, comments, bogus markup
-treated leniently.  Parity with the stdlib engine is pinned by
-tests/test_dom_parity.py over the golden fixtures, the synthetic
-corpus, and adversarial edge strings.
+The fused parser tokenizes with the regexes below and reproduces the
+callback stream of ``html.parser.HTMLParser`` with
+``convert_charrefs=True``: lowercased tag/attr names, entity-unescaped
+text and attribute values, raw-text handling for script/style,
+comments, bogus markup treated leniently.  ``MarkedSectionSafe`` and
+``_std_tail`` keep the stdlib side in step for malformed marked
+sections and unterminated constructs at EOF.  Parity with the stdlib
+engine is pinned by tests/test_dom_parity.py over the golden fixtures,
+the synthetic corpus, and adversarial edge strings.
 """
-
 from __future__ import annotations
 
 import re
@@ -86,126 +84,3 @@ def _std_tail(tail: str, builder) -> None:
     bridge = _Bridge(convert_charrefs=True)
     bridge.feed(tail)
     bridge.close()
-
-
-def feed(markup: str, builder) -> None:
-    """Drive ``builder`` (handle_starttag/handle_startendtag/
-    handle_endtag/handle_data/handle_comment) over ``markup``."""
-    handle_start = builder.handle_starttag
-    handle_startend = builder.handle_startendtag
-    handle_end = builder.handle_endtag
-    handle_data = builder.handle_data
-    handle_comment = builder.handle_comment
-    find = markup.find
-    i, n = 0, len(markup)
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            text = markup[i:]
-            handle_data(unescape(text) if "&" in text else text)
-            break
-        if lt > i:
-            text = markup[i:lt]
-            handle_data(unescape(text) if "&" in text else text)
-        nxt = markup[lt + 1] if lt + 1 < n else ""
-        if nxt == "!":
-            if markup.startswith("<!--", lt):
-                m = _COMMENT_CLOSE.search(markup, lt + 4)
-                if m is None:
-                    _std_tail(markup[lt:], builder)
-                    break
-                handle_comment(markup[lt + 4 : m.start()])
-                i = m.end()
-            elif markup[lt : lt + 9].lower() == "<!doctype":
-                gt = find(">", lt)  # declaration: skipped (no decl handler)
-                if gt < 0:
-                    _std_tail(markup[lt:], builder)
-                    break
-                i = gt + 1
-            elif markup.startswith("<![", lt):
-                end = find("]>", lt + 3)  # marked section: unknown_decl → ignored
-                if end < 0:
-                    _std_tail(markup[lt:], builder)
-                    break
-                i = end + 2
-            else:  # anything else after '<!' is a bogus comment (stdlib)
-                gt = find(">", lt)
-                if gt < 0:
-                    _std_tail(markup[lt:], builder)
-                    break
-                handle_comment(markup[lt + 2 : gt])
-                i = gt + 1
-        elif nxt == "/":
-            m = _END_RE.match(markup, lt)
-            if m:
-                handle_end(m.group(1).lower())
-                i = m.end()
-            elif markup[lt : lt + 3] == "</>":
-                i = lt + 3  # stdlib: empty end tag is ignored
-            else:
-                gt = find(">", lt)
-                if gt < 0:
-                    _std_tail(markup[lt:], builder)
-                    break
-                nm = _TOLERANT_NAME.match(markup, lt + 2)
-                if nm:  # '</x junk>': tolerant-name end tag (stdlib)
-                    handle_end(nm.group(1).lower())
-                    gt2 = find(">", nm.end())
-                    i = n if gt2 < 0 else gt2 + 1
-                else:  # bogus end tag: stdlib emits a bogus comment
-                    handle_comment(markup[lt + 2 : gt])
-                    i = gt + 1
-        elif nxt == "?":
-            gt = find(">", lt)  # processing instruction: skipped
-            if gt < 0:
-                _std_tail(markup[lt:], builder)
-                break
-            i = gt + 1
-        else:
-            m = _TAG_RE.match(markup, lt)
-            if m is None:
-                if nxt.isalpha():
-                    # incomplete or oddly-formed start tag: let stdlib
-                    # handle the remainder so its quirks match exactly
-                    _std_tail(markup[lt:], builder)
-                    break
-                # '<' followed by non-letter: literal text (stdlib)
-                handle_data("<")
-                i = lt + 1
-                continue
-            tag = m.group(1).lower()
-            attrs_src = m.group(2)
-            attrs = []
-            if attrs_src:
-                for am in _ATTR_RE.finditer(attrs_src):
-                    name = am.group(1).lower()
-                    if am.group(2) is not None:
-                        value = am.group(2)
-                    elif am.group(3) is not None:
-                        value = am.group(3)
-                    else:
-                        value = am.group(4)
-                    if value is not None and "&" in value:
-                        value = unescape(value)
-                    attrs.append((name, value))
-            i = m.end()
-            if m.group(3):
-                handle_startend(tag, attrs)
-            else:
-                handle_start(tag, attrs)
-                raw_end = _RAW_END.get(tag)
-                if raw_end is not None:
-                    em = raw_end.search(markup, i)
-                    if em is None:
-                        # stdlib drops unterminated raw-text content
-                        break
-                    if em.start() > i:
-                        handle_data(markup[i : em.start()])  # raw: no unescape
-                    endm = _END_RE.match(markup, em.start())
-                    if endm:
-                        handle_end(endm.group(1).lower())
-                        i = endm.end()
-                    else:
-                        gt = find(">", em.start())
-                        handle_end(tag)
-                        i = n if gt < 0 else gt + 1

@@ -8,7 +8,6 @@ comments, implied end tags for the common block/table/list cases.
 
 from __future__ import annotations
 
-import os
 from html.parser import HTMLParser as _StdHTMLParser
 from typing import List, Optional, Tuple
 
@@ -103,7 +102,7 @@ class _TreeBuilder:
 
 class _StdBridge(fasthtml.MarkedSectionSafe, _StdHTMLParser):
     """stdlib tokenizer → builder callbacks (the reference engine for
-    the parity tests; also the fallback via UNIPARSER_SPARK_HTML_ENGINE=std).
+    the parity tests, selected with ``parse_html(..., engine="std")``).
     MarkedSectionSafe keeps malformed ``<![`` from crashing the stdlib
     tokenizer and pins the ``]>`` close rule to the fast engine's."""
 
@@ -129,12 +128,11 @@ class _StdBridge(fasthtml.MarkedSectionSafe, _StdHTMLParser):
 
 def _fused_parse(markup: str) -> HtmlDocument:
     """Fused tokenizer + tree builder: one scan loop constructing the
-    DOM directly, with no per-node callback dispatch.  ~1.5× faster
-    than fasthtml.feed + _TreeBuilder (the builder path costs ~6 Python
-    calls per node; a 20 KB page has ~800 nodes).  Token-for-token the
-    same state machine as fasthtml.feed and node-for-node the same tree
-    as _TreeBuilder — parity pinned by tests/test_dom_parity.py across
-    all three engines on the golden corpus, edges, and fuzz strings."""
+    DOM directly, with no per-node callback dispatch (a callback
+    builder costs ~6 Python calls per node; a 20 KB page has ~800
+    nodes).  Node-for-node the same tree as the stdlib tokenizer
+    driving _TreeBuilder — parity pinned by tests/test_dom_parity.py
+    on the golden corpus, edges, and fuzz strings."""
     root = HtmlDocument("[document]")
     stack: List[HtmlElement] = [root]
 
@@ -300,21 +298,16 @@ def _fused_parse(markup: str) -> HtmlDocument:
     return root
 
 
-def parse_html(markup: str, engine: Optional[str] = None) -> HtmlDocument:
+def parse_html(markup: str, engine: str = "fast") -> HtmlDocument:
     """markup → DOM.  engine: 'fast' (default; fused scanner+builder,
-    ~6× stdlib), 'scan' (scanner tokenizer driving the callback
-    builder — the fused engine's structural twin), or 'std' (stdlib
-    html.parser — the behavioral reference both are parity-tested
-    against)."""
-    if engine is None:
-        engine = os.environ.get("UNIPARSER_SPARK_HTML_ENGINE", "fast")
+    ~6× stdlib) or 'std' (stdlib html.parser — the behavioral reference
+    the fast engine is parity-tested against)."""
     if engine == "fast":
         return _fused_parse(markup)
+    if engine != "std":
+        raise ValueError(f"unknown HTML engine {engine!r} (use 'fast' or 'std')")
     builder = _TreeBuilder()
-    if engine == "std":
-        bridge = _StdBridge(builder)
-        bridge.feed(markup)
-        bridge.close()
-    else:
-        fasthtml.feed(markup, builder)
+    bridge = _StdBridge(builder)
+    bridge.feed(markup)
+    bridge.close()
     return builder.root
