@@ -94,12 +94,9 @@ def run_crawl(spark, n_pages: int) -> dict:
         # materialize the page corpus as parquet first (untimed input
         # prep): the engine's fetch join then scans a real columnar
         # table with pushdown/pruning, as it would against Common Crawl.
-        # Fixed 128-way RANGE layout sorted by url — the Iceberg
-        # sort-order a production pages table carries — so row-group
-        # min/max stats actually prune the seed round's In-filtered
-        # fetch (an unsorted layout forces a full 2 GB decompress to
-        # find the ~500 list pages), and the INPUT is identical at every
-        # parallelism level (fair N vs 4N comparison).
+        # Fixed 128-way RANGE layout sorted by url (the sort order a
+        # production pages table carries) keeps the INPUT identical at
+        # every parallelism level (fair N vs 4N comparison).
         pages_path = os.path.join(base_dir, "pages")
         generate_pages(
             spark, n_hosts=n_hosts, n_details=n_pages, partitions=128

@@ -2,6 +2,7 @@
 simulator — nested results and seen-set membership must match."""
 
 import json
+import os
 
 import pytest
 
@@ -25,7 +26,7 @@ def test_crawl_matches_simulator(spark, corpus, tmp_path):
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
 
-    engine = CrawlEngine(spark, pages, storage_json, tmp_path / "state", state_partitions=4)
+    engine = CrawlEngine(spark, pages, storage_json, tmp_path / "state")
     engine.seed(seeds)
     rounds = engine.run(max_rounds=10)
     assert rounds[-1]["done"] or rounds[-1]["scheduled"] == 0
@@ -56,11 +57,11 @@ def test_crawl_resume_from_checkpoint(spark, corpus, tmp_path):
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     state = tmp_path / "state_resume"
 
-    first = CrawlEngine(spark, pages, storage_json, state, state_partitions=4)
+    first = CrawlEngine(spark, pages, storage_json, state)
     first.seed(seeds)
     first.run_round()  # crawl only the seeds, then "crash"
 
-    resumed = CrawlEngine(spark, pages, storage_json, state, state_partitions=4)
+    resumed = CrawlEngine(spark, pages, storage_json, state)
     assert resumed.read_manifest()["round"] == 1
     resumed.run(max_rounds=10)
 
@@ -69,6 +70,28 @@ def test_crawl_resume_from_checkpoint(spark, corpus, tmp_path):
     expected = [simulate_crawl(storage, store, u, seen=seen_sim) for u in seeds]
     assert resumed.assemble_results(seeds) == expected
     assert {r["url_canon"] for r in resumed.seen().collect()} == set(seen_sim.keys())
+
+
+def test_run_round_three_sink_writes(spark, corpus, tmp_path, monkeypatch):
+    """run_round's docstring promises three sink writes per round:
+    records, the seen delta, and the next frontier — nothing else."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages, storage_json, _ = corpus
+    state = tmp_path / "state_writes"
+    engine = CrawlEngine(spark, pages, storage_json, state)
+    engine.seed([testgen.list_url(testgen.host_name(i)) for i in range(3)])
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        written.append(os.path.relpath(path, state))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    engine.run_round()
+    assert written == ["records/r0", "seen/r1", "frontier/r1"]
 
 
 def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):
@@ -80,7 +103,7 @@ def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):
     budgets = spark.createDataFrame([(host0, 1)], "host string, budget int")
 
     engine = CrawlEngine(
-        spark, pages, storage_json, tmp_path / "state_budget", budgets=budgets, state_partitions=4
+        spark, pages, storage_json, tmp_path / "state_budget", budgets=budgets
     )
     engine.seed(seeds)
     rounds = engine.run(max_rounds=10)
@@ -102,7 +125,7 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
     ]
     import uniparser_spark.config as cfg
 
-    engine = CrawlEngine(spark, pages, cfg.json_dumps(storage), tmp_path / "state_miss", state_partitions=2)
+    engine = CrawlEngine(spark, pages, cfg.json_dumps(storage), tmp_path / "state_miss")
     engine.seed([testgen.list_url(host)])
     engine.run(max_rounds=5)
     [result] = engine.assemble_results([testgen.list_url(host)])
@@ -127,9 +150,7 @@ def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
     )
 
     def crawl(name, **kwargs):
-        eng = CrawlEngine(
-            spark, pages, storage_json, tmp_path / f"state_{name}", state_partitions=4, **kwargs
-        )
+        eng = CrawlEngine(spark, pages, storage_json, tmp_path / f"state_{name}", **kwargs)
         eng.seed(seeds)
         rounds = [
             (s["round"], s["scheduled"], s.get("new_candidates"), s.get("deferred"))
@@ -154,7 +175,7 @@ def test_expire_and_requeue_recrawls(spark, corpus, tmp_path):
     second crawl pass reproduces the same extraction records."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_ttl", state_partitions=4)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_ttl")
     eng.seed(seeds)
     eng.run(max_rounds=10)
     first_pass = {
@@ -206,13 +227,13 @@ def test_crawl_with_pluggable_adapter(spark, corpus, tmp_path):
     adapter = RetryingAdapter(FlakyOnce(store), retries=2)
     engine = CrawlEngine(
         spark, None, storage_json, tmp_path / "state_adapter",
-        adapter=adapter, state_partitions=2,
+        adapter=adapter,
     )
     engine.seed(seeds)
     engine.run(max_rounds=10)
     got = engine.assemble_results(seeds)
 
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_join", state_partitions=2)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_join")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert got == ref.assemble_results(seeds)
@@ -228,7 +249,7 @@ def test_seen_deltas_are_append_only_and_compact(spark, corpus, tmp_path):
     maintenance compacts the log and advances seen_base."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_delta", state_partitions=2)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_delta")
     eng.seed(seeds)
     rounds = eng.run(max_rounds=10)
 
@@ -257,7 +278,7 @@ def test_seen_inline_autocompaction(spark, corpus, tmp_path):
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     eng = CrawlEngine(
         spark, pages, storage_json, tmp_path / "state_autocompact",
-        state_partitions=2, seen_compact_every=2,
+        seen_compact_every=2,
     )
     eng.seed(seeds)
     rounds = eng.run(max_rounds=10)
@@ -267,7 +288,7 @@ def test_seen_inline_autocompaction(spark, corpus, tmp_path):
     assert d2.count() == sum(s.get("scheduled", 0) for s in rounds)  # full log
     assert eng.seen().count() == d2.count()
     # parity with the un-compacted engine
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_nocompact", state_partitions=2)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_nocompact")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert (
@@ -295,7 +316,7 @@ def test_seen_log_long_horizon_soak(spark, tmp_path):
     def new_engine():
         return CrawlEngine(
             spark, pages, storage_json, state,
-            state_partitions=2, seen_compact_every=5,
+            seen_compact_every=5,
         )
 
     eng = new_engine()
@@ -356,9 +377,7 @@ def test_expire_and_requeue_freshness_ranked(spark, corpus, tmp_path):
     ones, and all recrawls still rank below fresh finds (>= 0)."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
-    eng = CrawlEngine(
-        spark, pages, storage_json, tmp_path / "state_fresh", state_partitions=4
-    )
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_fresh")
     eng.seed(seeds)
     eng.run(max_rounds=10)
     seen_urls = [r["url_canon"] for r in eng.seen().collect()]
@@ -405,8 +424,7 @@ def test_seed_df_from_sitemap_entries(spark, corpus, tmp_path):
     )
     seed_tbl = seeds_from_entries(sitemap_entries(sm_pages))
 
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_smseed",
-                      state_partitions=4)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_smseed")
     eng.seed_df(seed_tbl)
     frontier = spark.read.parquet(str(tmp_path / "state_smseed" / "frontier" / "r0"))
     rows = {r["url_canon"]: r for r in frontier.collect()}
@@ -422,8 +440,7 @@ def test_seed_df_from_sitemap_entries(spark, corpus, tmp_path):
     assert rounds[-1]["done"] or rounds[-1]["scheduled"] == 0
     got = eng.assemble_results(seeds)
     # same extraction results as a plain list-seeded crawl
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_listseed",
-                      state_partitions=4)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_listseed")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert got == ref.assemble_results(seeds)
@@ -456,7 +473,7 @@ def test_crawl_dust_rules_collapse_aliases_prefetch(spark, tmp_path):
     )
     eng = CrawlEngine(
         spark, pages, cfg.json_dumps(storage), tmp_path / "state_dust",
-        state_partitions=2, dust_rules=rules,
+        dust_rules=rules,
     )
     eng.seed([testgen.list_url(host)])
     eng.run(max_rounds=5)
@@ -493,7 +510,7 @@ def test_crawl_honor_nofollow_drops_children(spark, corpus, tmp_path):
 
     eng = CrawlEngine(
         spark, tagged, storage_json, tmp_path / "state_nf",
-        state_partitions=4, honor_nofollow=True,
+        honor_nofollow=True,
     )
     eng.seed(seeds)
     eng.run(max_rounds=6)
@@ -506,10 +523,7 @@ def test_crawl_honor_nofollow_drops_children(spark, corpus, tmp_path):
     assert any(u.startswith(f"https://{h0}/item-") for u in crawled)
 
     # control: same corpus without the flag follows h1's links
-    eng2 = CrawlEngine(
-        spark, tagged, storage_json, tmp_path / "state_nf_off",
-        state_partitions=4,
-    )
+    eng2 = CrawlEngine(spark, tagged, storage_json, tmp_path / "state_nf_off")
     eng2.seed(seeds)
     eng2.run(max_rounds=6)
     crawled2 = {r["url"] for r in eng2.records().collect()}
@@ -526,7 +540,7 @@ def test_crawl_blocklist_keeps_domain_out_of_frontier(spark, corpus, tmp_path):
 
     eng = CrawlEngine(
         spark, pages, storage_json, tmp_path / "state_bl",
-        state_partitions=4, blocklist=rules,
+        blocklist=rules,
     )
     eng.seed(seeds)
     eng.run(max_rounds=6)

@@ -99,10 +99,7 @@ def test_redirect_dangling_targets_feed_frontier(spark, tmp_path):
     )
     assert dangling.count() == 1
 
-    eng = CrawlEngine(
-        spark, pages, storage_json, tmp_path / "state_redir",
-        state_partitions=4,
-    )
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_redir")
     eng.seed_df(dangling)
     eng.run(max_rounds=10)
     seen = {r["url_canon"] for r in eng.seen().collect()}

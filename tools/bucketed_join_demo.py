@@ -1,15 +1,14 @@
 #!/usr/bin/env python3
 """Evidence: bucketed state tables make the seen anti-join shuffle-free.
 
-The crawl engine writes its parquet state repartitioned by
-``pmod(url_hash, n)`` so successive rounds read co-partitioned files,
-but plain parquet carries no bucketing metadata — Spark still plans an
-Exchange on BOTH sides of the candidates-vs-seen anti-join.  A real
-deployment stores the seen log as bucketed tables (Iceberg bucket
-transform / Hive bucketBy): the same anti-join then plans with ZERO
-Exchange (both scans report ``Bucketed: true``) — at a 10^10-row seen
-set that is the difference between shuffling the whole seen log every
-round and streaming co-located buckets.
+The crawl engine writes its state as plain parquet, which carries no
+bucketing metadata — Spark plans an Exchange on BOTH sides of the
+candidates-vs-seen anti-join, however the files were partitioned when
+written.  A real deployment stores the seen log as bucketed tables
+(Iceberg bucket transform / Hive bucketBy): the same anti-join then
+plans with ZERO Exchange (both scans report ``Bucketed: true``) — at a
+10^10-row seen set that is the difference between shuffling the whole
+seen log every round and streaming co-located buckets.
 
 Run: python tools/bucketed_join_demo.py [n_rows]
 Prints wall time + Exchange count for plain-parquet vs bucketed-table

@@ -27,9 +27,10 @@ Resume = read manifest, continue from round k; a crashed round leaves
 the previous manifest intact (write new dirs first, swap manifest last).
 
 Scale notes (10^10-URL design):
-- frontier/seen parquet are written repartitioned by ``pmod(url_hash)``
-  so the anti-join and the next round's schedule shuffle read
-  co-partitioned buckets (real deployments: Iceberg bucket transform);
+- frontier/seen are plain parquet, written with the partitioning their
+  plans already have: plain parquet carries no bucketing metadata, so no
+  write-time layout would spare the anti-join its shuffle on url_hash;
+  bucketed tables would (tools/bucketed_join_demo.py);
 - the fetch is an equi-join frontier→pages on url (broadcast of the
   scheduled batch, shuffle join past ``BROADCAST_FETCH_MAX``; pages side
   pruned to (url, text/html) columns only);
@@ -99,7 +100,6 @@ class CrawlEngine:
         robots: Optional[DataFrame] = None,
         default_budget: int = 100000,
         salt_buckets: int = 16,
-        state_partitions: Optional[int] = None,
         text_col: str = "text",
         html_col: Optional[str] = None,
         adapter=None,
@@ -147,7 +147,6 @@ class CrawlEngine:
         self.honor_nofollow = honor_nofollow
         self.default_budget = default_budget
         self.salt_buckets = salt_buckets
-        self.state_partitions = state_partitions or spark.sparkContext.defaultParallelism
         self.text_col = text_col
         self.html_col = html_col
         # bound the delta-log width: after this many un-compacted rounds
@@ -176,8 +175,8 @@ class CrawlEngine:
     def _seen_view(self, manifest: dict, upto_rnd: int) -> DataFrame:
         """The live seen set: union of the append-only deltas from the
         last compaction (manifest seen_base) through ``upto_rnd``.  Each
-        delta is bucket-repartitioned parquet; the union preserves the
-        narrow (url_hash, url_canon, crawled_round) schema."""
+        delta is plain parquet; the union preserves the narrow
+        (url_hash, url_canon, crawled_round) schema."""
         base = int(manifest.get("seen_base", 0) or 0)
         wanted = [(r, self._p("seen", r)) for r in range(base, upto_rnd + 1)]
         missing = [r for r, p in wanted if not Path(p).exists()]
@@ -212,11 +211,11 @@ class CrawlEngine:
             rows, "url string, priority double, depth int, parent_url string, list_index int, discovered_round int"
         )
         frontier = add_url_keys(df).select(*_META_COLS)
-        self._write_state(frontier, self._p("frontier", 0), rows_hint=len(urls))
+        frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
         empty_seen = self.spark.createDataFrame(
             [], "url_hash long, url_canon string, crawled_round int"
         )
-        self._write_state(empty_seen, self._p("seen", 0), partitions=1)
+        empty_seen.write.mode("overwrite").parquet(self._p("seen", 0))
         self._commit_manifest(
             {
                 "round": 0,
@@ -273,12 +272,12 @@ class CrawlEngine:
         frontier = dedup.observe(obs, F.count(F.lit(1)).alias("n")).select(
             *_META_COLS
         )
-        self._write_state(frontier, self._p("frontier", 0))
+        frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
         n = int(obs.get["n"])
         empty_seen = self.spark.createDataFrame(
             [], "url_hash long, url_canon string, crawled_round int"
         )
-        self._write_state(empty_seen, self._p("seen", 0), partitions=1)
+        empty_seen.write.mode("overwrite").parquet(self._p("seen", 0))
         self._commit_manifest(
             {
                 "round": 0,
@@ -289,29 +288,6 @@ class CrawlEngine:
                 "seen_base": 0,
             }
         )
-
-    def _write_state(
-        self,
-        df: DataFrame,
-        path: str,
-        partitions: Optional[int] = None,
-        rows_hint: Optional[int] = None,
-    ) -> None:
-        # bucket state by url_hash so successive rounds read co-partitioned;
-        # partition count scales with the known state size (rows_hint from
-        # the round's observed counters) so small states don't pay
-        # state_partitions-many task launches per write.  Floor of
-        # min(8, n): rows_hint is only a hint (frontier fan-out can blow
-        # past it 100×), and a 1-partition write serializes the parquet
-        # encode — a measured ~2 s Amdahl tax per round that never
-        # scales with cores.  Eight tasks keep small-state writes cheap
-        # while bounding the serial fraction.
-        n = partitions or self.state_partitions
-        if rows_hint is not None:
-            n = max(min(8, n), min(n, rows_hint // 500_000 + 1))
-        df.repartition(n, F.pmod(F.col("url_hash"), F.lit(n)) if "url_hash" in df.columns else F.lit(0)).write.mode(
-            "overwrite"
-        ).parquet(path)
 
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
@@ -451,12 +427,7 @@ class CrawlEngine:
             delta = self._seen_view(manifest, rnd).unionByName(delta)
         obs_seen = Observation()
         delta = delta.observe(obs_seen, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            delta,
-            self._p("seen", rnd + 1),
-            rows_hint=(int(manifest.get("seen_total", 0)) if compacting else 0)
-            + n_scheduled,
-        )
+        delta.write.mode("overwrite").parquet(self._p("seen", rnd + 1))
         if compacting:
             seen_total = int(obs_seen.get["n"])
             seen_base = rnd + 1
@@ -558,9 +529,7 @@ class CrawlEngine:
                 F.when(F.col("discovered_round") == rnd + 1, 1).otherwise(0)
             ).alias("fresh"),
         )
-        self._write_state(
-            next_frontier, self._p("frontier", rnd + 1), rows_hint=n_scheduled * 2
-        )
+        next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
         n_pending_next = int(obs_front.get["n"])
         n_fresh = int(obs_front.get["fresh"] or 0)
 
@@ -620,9 +589,7 @@ class CrawlEngine:
 
         obs_seen = Observation()
         kept = kept.observe(obs_seen, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            kept, self._p("seen", rnd + 1), rows_hint=int(manifest.get("seen_total", 0))
-        )
+        kept.write.mode("overwrite").parquet(self._p("seen", rnd + 1))
         seen_kept = int(obs_seen.get["n"])
 
         if history is not None:
@@ -661,11 +628,7 @@ class CrawlEngine:
         next_frontier = pending.unionByName(requeued)
         obs_front = Observation()
         next_frontier = next_frontier.observe(obs_front, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            next_frontier,
-            self._p("frontier", rnd + 1),
-            rows_hint=int(manifest.get("n_pending", 0) or 0) + seen_kept,
-        )
+        next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
         n_pending = int(obs_front.get["n"])
 
         stats = {

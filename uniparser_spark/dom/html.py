@@ -1,18 +1,49 @@
-"""HTML parsing to the mini-DOM, built on stdlib ``html.parser``.
+"""HTML parsing to the mini-DOM.
 
 Behavioral contract: the golden values of the reference CSS/selectolax
 parser tests (/root/reference/test_parsers.py:170-305) — attribute
 order preserved from source, comments kept as nodes, ``.text`` skips
 comments, implied end tags for the common block/table/list cases.
+
+Two engines build the same tree.  The fast one (``_fused_parse``)
+tokenizes with the regexes below and reproduces the callback stream of
+stdlib ``html.parser.HTMLParser`` with ``convert_charrefs=True``:
+lowercased tag/attr names, entity-unescaped text and attribute values,
+raw-text handling for script/style, comments, bogus markup treated
+leniently.  The stdlib one (``_StdBridge``) is its behavioral reference
+and also flushes the fast engine's unterminated constructs at EOF.
+Parity is pinned by tests/test_dom_parity.py over the golden fixtures,
+the synthetic corpus, and adversarial edge strings.
 """
 
 from __future__ import annotations
 
+import re
+from html import unescape
 from html.parser import HTMLParser as _StdHTMLParser
 from typing import List, Optional, Tuple
 
-from . import fasthtml
 from .nodes import Comment, Element, Text
+
+_TAG_RE = re.compile(
+    r"<([a-zA-Z][-.:0-9a-zA-Z]*)"  # tag name
+    r"((?:\s+[^\s/>=]+(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>]*))?)*)"  # attrs
+    r"\s*(/?)\s*>"
+)
+_ATTR_RE = re.compile(
+    r"([^\s/>=]+)(?:\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]*)))?"
+)
+_END_RE = re.compile(r"</\s*([a-zA-Z][-.:_0-9a-zA-Z]*)\s*>")
+_TOLERANT_NAME = re.compile(r"([a-zA-Z][-.:_0-9a-zA-Z]*)")
+
+# script/style content is raw text: scan for the closing tag literally
+_RAW_END = {
+    tag: re.compile(rf"</\s*{tag}(?=[\s/>])|</\s*{tag}\s*>", re.IGNORECASE)
+    for tag in ("script", "style")
+}
+
+# stdlib allows whitespace between the closing dashes and '>'
+_COMMENT_CLOSE = re.compile(r"--\s*>")
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -54,8 +85,8 @@ class HtmlDocument(HtmlElement):
 
 
 class _TreeBuilder:
-    """Parser-agnostic DOM builder: both the fast scanner tokenizer
-    (dom.fasthtml) and the stdlib bridge drive these callbacks."""
+    """Parser-agnostic DOM builder driven by the stdlib bridge (the
+    std engine, and the fast engine's EOF tail)."""
 
     def __init__(self):
         self.root = HtmlDocument("[document]")
@@ -100,11 +131,35 @@ class _TreeBuilder:
         self.top.append(Comment(data))
 
 
-class _StdBridge(fasthtml.MarkedSectionSafe, _StdHTMLParser):
+class MarkedSectionSafe:
+    """Never-crash marked sections for stdlib-bridge parsers.
+
+    CPython's ``_markupbase.parse_marked_section`` raises
+    ``AssertionError`` on ``<![`` followed by no valid section name
+    (e.g. ``<![0``, real-web garbage) and ``NotImplementedError`` on
+    unknown keywords — both would turn a malformed page into a
+    parse-time crash instead of a tree.  Override with the SAME rule
+    the fast tokenizer uses: consume to the next ``]>`` emitting
+    nothing (stdlib's unknown_decl is a no-op anyway), and drop an
+    unterminated section at EOF.  This also removes a latent
+    divergence: stdlib matched the looser ``]\\s*]\\s*>`` close, so
+    ``<![CDATA[a]>b]]>`` ended at a different offset than the fast
+    engine's ``]>`` scan."""
+
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        rawdata = self.rawdata
+        j = rawdata.find("]>", i + 3)
+        if j < 0:
+            return len(rawdata)  # unterminated at EOF: drop
+        return j + 2
+
+
+class _StdBridge(MarkedSectionSafe, _StdHTMLParser):
     """stdlib tokenizer → builder callbacks (the reference engine for
-    the parity tests, selected with ``parse_html(..., engine="std")``).
-    MarkedSectionSafe keeps malformed ``<![`` from crashing the stdlib
-    tokenizer and pins the ``]>`` close rule to the fast engine's."""
+    the parity tests, selected with ``parse_html(..., engine="std")``,
+    and the fast engine's EOF tail).  MarkedSectionSafe keeps malformed
+    ``<![`` from crashing the stdlib tokenizer and pins the ``]>`` close
+    rule to the fast engine's."""
 
     def __init__(self, builder: _TreeBuilder):
         super().__init__(convert_charrefs=True)
@@ -137,25 +192,28 @@ def _fused_parse(markup: str) -> HtmlDocument:
     stack: List[HtmlElement] = [root]
 
     # hot-loop locals (LOAD_FAST beats LOAD_GLOBAL ~2×)
-    unescape_ = fasthtml.unescape
+    unescape_ = unescape
     Text_, Comment_, El_ = Text, Comment, HtmlElement
     void = VOID_ELEMENTS
     p_closing = _P_CLOSING
     sib_get = _SIBLING_CLOSERS.get
-    tag_match = fasthtml._TAG_RE.match
-    attr_finditer = fasthtml._ATTR_RE.finditer
-    end_match = fasthtml._END_RE.match
-    comment_close = fasthtml._COMMENT_CLOSE.search
-    raw_get = fasthtml._RAW_END.get
-    tolerant_match = fasthtml._TOLERANT_NAME.match
+    tag_match = _TAG_RE.match
+    attr_finditer = _ATTR_RE.finditer
+    end_match = _END_RE.match
+    comment_close = _COMMENT_CLOSE.search
+    raw_get = _RAW_END.get
+    tolerant_match = _TOLERANT_NAME.match
     find = markup.find
 
     def tail(frag: str) -> None:
-        # EOF quirks: delegate to the stdlib tokenizer through a builder
+        # EOF quirks: hand the unterminated tail to the stdlib tokenizer
+        # so every EOF flush quirk matches exactly, through a builder
         # sharing this parse's stack (runs at most once, on tiny tails)
         b = _TreeBuilder.__new__(_TreeBuilder)
         b.root, b.stack = root, stack
-        fasthtml._std_tail(frag, b)
+        bridge = _StdBridge(b)
+        bridge.feed(frag)
+        bridge.close()
 
     i, n = 0, len(markup)
     while i < n:
